@@ -9,17 +9,24 @@ graft.Verify (parquet in <outDir>/<name>/), run the matching SQL from
 compare after sorting columns by name and rows by all values.
 
 Exit 0 iff every query with an oracle matches exactly. Queries without
-an oracle entry are listed as rows-only (count shown).
+an oracle entry are listed as rows-only (count shown). Queries named in
+<outDir>/quadratic_oracle.json (written by graft.Verify) have twins that
+do not finish beyond sf0.01; they are reported as skipped, never as
+matched, when the documents table has more than SF001_DOCUMENTS rows.
 """
 import glob
 import json
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+# documents rows at sf0.01 (sf0.1 has 5000): the largest input on which
+# the quadratic twins still run
+SF001_DOCUMENTS = 500
 
 
 def norm_cell(v):
@@ -71,11 +78,19 @@ def main(sf_dir, out_dir):
     for t in TABLES:
         con.sql(f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    import os
+    skip = set()
+    n_docs = con.sql("select count(*) from documents").fetchone()[0]
+    quadratic_path = f"{out_dir}/quadratic_oracle.json"
+    if n_docs > SF001_DOCUMENTS and os.path.exists(quadratic_path):
+        skip = set(json.load(open(quadratic_path)))
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(f"{out_dir}/{d}"))
-    failed = []
+    failed, skipped = [], []
     for name in names:
+        if name in skip:
+            print(f"  - {name}: skipped (quadratic oracle, {n_docs} documents > {SF001_DOCUMENTS})")
+            skipped.append(name)
+            continue
         got_rel = con.sql(f"select * from read_parquet('{out_dir}/{name}/*.parquet')")
         if name not in oracle:
             print(f"  ~ {name}: rows-only ({len(got_rel.fetchall())} rows, no oracle)")
@@ -108,6 +123,8 @@ def main(sf_dir, out_dir):
             diffs = [(a, b) for a, b in zip(gs, es) if a != b][:3]
             print(f"  ✗ {name}: value mismatch ({len(gr)} vs {len(er)} rows); first diffs: {diffs}")
         failed.append(name)
+    print(f"checked {len(names) - len(skipped)}, skipped {len(skipped)}"
+          + (f": {','.join(skipped)}" if skipped else ""))
     print(f"{'FAIL: ' + ','.join(failed) if failed else 'ALL MATCH'}")
     return 1 if failed else 0
 

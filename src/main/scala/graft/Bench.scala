@@ -1,4 +1,5 @@
 package graft
+import graft.queries.{Registry, Tag}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: every SparkEntry query against
@@ -84,53 +85,11 @@ import org.apache.spark.sql.SparkSession
   * `parsed: null` because the ~8 KB line outran the tail buffer). */
 object Bench {
 
-  /** The I/O-round-trip family: these queries measure real file-system
-    * and embedded-database writes (ingest/tombstone/JDBC/price), so
-    * their medians absorb whatever else the HOST is doing with the
-    * disk — across r4/r5/r6 the same byte-identical code measured
-    * q38 at 15.9/2.7/12.8 s while pure-compute queries held steady.
-    * Per-family JVM isolation (r9) removes the shared-JVM component
-    * of that noise; host-level disk contention remains, so the list
-    * is still emitted under `io_family` and SCALE.md records how
-    * tightly the family reproduces under isolation. */
-  val IoFamily: Set[String] = Set(
-    "q32_ingest_roundtrip", "q35_tombstone_roundtrip",
-    "q38_jdbc_roundtrip", "q44_price_roundtrip",
-    // writes two parquet chains + registers catalog databases per run
-    "q94_chain_namespaces")
-
-  /** q123's bench number prices the md5 ORACLE hash family — the
-    * family its gate needs (engine-portable per-gram hashes), at
-    * roughly twice the per-gram cost of the xxh64 family production
-    * serves (`LangId.classifyQuantized(family = "xxh64")`). Emitted
-    * in the artifact (the `io_family` precedent) so a future round
-    * reading the most expensive non-streaming scan query attributes
-    * the cost to the deliberate oracle-family choice, not to code
-    * (r13 verdict "wrong #2"). */
-  val LangidFamily: Map[String, String] = Map(
-    "q123_langid_serve" -> "md5",
-    "q128_trained_lang_composition" -> "md5")
-
-  /** The streaming-drain family (r16, the r15 verdict's #6): these
-    * queries run a checkpointed Structured Streaming drain end-to-end
-    * (fresh checkpoint + index dirs per run), so they CANNOT warm —
-    * every run pays checkpoint creation, micro-batch scheduling and
-    * index/corpus compaction from cold, and their min↔med spreads ran
-    * up to 1.8x in r15's full pass. Not a code property worth fixing
-    * (a warmed drain would measure a different thing than the gate
-    * gates), so the artifact marks them the way `io_family` marks
-    * host-disk sensitivity: each drain runs in its OWN singleton
-    * child JVM in the main pass, and additionally gets
-    * SPARK_GRAFT_BENCH_DRAIN_SAMPLES (default 2) SPACED quiet
-    * re-measures after the pass (r18 — the r17 verdict's q129 band
-    * ran 29→52 s across single same-code quiet runs, so ONE quiet
-    * number per round was unfalsifiable; `remeasured` now carries a
-    * LIST per query and a cross-round claim cites the band, not a
-    * point). q128 is noisy for a different reason (md5 oracle
-    * family) and is already marked under `langid_family`. */
-  val DrainFamily: Set[String] = Set(
-    "q124_crawl_drain", "q126_raw_crawl_drain", "q129_embedding_drain",
-    "q130_media_drain", "q135_robots_drain")
+  /** The bench families, derived from the query tags (each tag's
+    * scaladoc in [[Tag]] records why its family is marked). */
+  val IoFamily: Set[String] = Registry.tagged(Tag.Io)
+  val LangidFamily: Map[String, String] = Registry.langidFamilies
+  val DrainFamily: Set[String] = Registry.tagged(Tag.Drain)
 
   /** Per-query measurement record: the median is the citable number
     * (unchanged contract); min/max of the timed runs plus the warmup

@@ -1,8 +1,11 @@
 package graft
+import graft.queries.{Registry, Tag}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * quadratic_oracle.json (the names whose twins `check_oracle.py`
+  * skips above sf0.01, see [[Tag.QuadraticOracle]]). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -52,6 +55,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val quadratic = Registry.tagged(Tag.QuadraticOracle).toSeq.sorted
+      .map(q).mkString("[", ",", "]")
+    Files.writeString(Paths.get(s"$outDir/quadratic_oracle.json"), quadratic)
     spark.stop()
   }
 }

@@ -132,10 +132,18 @@ object LangId {
       weights: Seq[(String, Long, Double)], dim: Int, ns: Seq[Int],
       family: String)
 
-  /** Integer-quantized model for exact-arithmetic serving. */
+  /** Integer-quantized model for exact-arithmetic serving. Every
+    * `weights` delta must be positive: [[classifyQuantized]]'s
+    * floor-only argmax envelope is exact only then, so a hand-built or
+    * loaded model with a zero or negative delta refuses here. */
   final case class Quantized(langs: Seq[(String, Long, Long)],
       weights: Seq[(String, Long, Long)], dim: Int, ns: Seq[Int], scale: Double,
-      family: String)
+      family: String) {
+    require(weights.forall(_._3 > 0), {
+      val (lang, bucket, qdw) = weights.find(_._3 <= 0).get
+      s"langid weight ($lang, $bucket) has qdw=$qdw; every quantized delta must be > 0"
+    })
+  }
 
   /** Train multinomial NB from a labeled corpus — ONE feature pass,
     * one (lang,bucket) aggregation, one (lang) aggregation; the only

@@ -153,6 +153,25 @@ class LangIdSpec extends SparkSpec {
     assert(e.getMessage.contains("refusing to serve"))
   }
 
+  test("load refuses an artifact with a non-positive weight delta, naming the row") {
+    val dir = java.nio.file.Files.createTempDirectory("langid_good").toString + "/m"
+    LangId.save(spark, quantized, dir)
+    val (lang, bucket, _) = quantized.weights.minBy(w => (w._1, w._2))
+    val bad = java.nio.file.Files.createTempDirectory("langid_bad").toString + "/m"
+    spark.read.parquet(s"$dir/langs").write.parquet(s"$bad/langs")
+    spark.read.parquet(s"$dir/weights")
+      .withColumn("qdw", when(col("lang") === lang && col("bucket") === bucket, lit(0L))
+        .otherwise(col("qdw")))
+      .write.parquet(s"$bad/weights")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "_langid.json"),
+      java.nio.file.Paths.get(bad, "_langid.json"))
+    val e = intercept[IllegalArgumentException](LangId.load(spark, bad))
+    assert(e.getMessage.contains(s"($lang, $bucket) has qdw=0"))
+    // a hand-built model refuses the same way
+    intercept[IllegalArgumentException](LangId.Quantized(Seq(("en", 0L, -1L)),
+      Seq(("en", 7L, -3L)), 16, Seq(1), 1e6, "md5"))
+  }
+
   test("zero evidence yields und; empty and whitespace-only text never crash") {
     val docs = Seq((1L, ""), (2L, "   \t  \n "), (3L, "the weather is nice"))
       .toDF("id", "text")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.{Registry, Tag}
 import org.apache.spark.sql.functions._
 
 /** Semantics the DuckDB oracle can't check: sketch accuracy, entry
@@ -16,6 +17,24 @@ class QuerySpec extends SparkSpec {
     val qs = SparkEntry.queries.keySet
     val orphans = SparkEntry.oracleSql.keySet.diff(qs)
     assert(orphans.isEmpty, s"oracleSql without queries: $orphans")
+  }
+
+  test("every registered query has a non-empty oracle twin") {
+    val empty = Registry.all.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(empty.isEmpty, s"queries without an oracle: $empty")
+  }
+
+  test("tag-derived sets hold today's exact names") {
+    assert(Bench.IoFamily === Set("q32_ingest_roundtrip", "q35_tombstone_roundtrip",
+      "q38_jdbc_roundtrip", "q44_price_roundtrip", "q94_chain_namespaces"))
+    assert(Bench.LangidFamily === Map(
+      "q123_langid_serve" -> "md5", "q128_trained_lang_composition" -> "md5"))
+    assert(Bench.DrainFamily === Set("q124_crawl_drain", "q126_raw_crawl_drain",
+      "q129_embedding_drain", "q130_media_drain", "q135_robots_drain"))
+    assert(Registry.tagged(Tag.QuadraticOracle) === Set("q33_near_dup_bucketed",
+      "q47_embedding_near_dup", "q57_dup_clusters", "q74_incremental_dedup",
+      "q78_canonical_selection", "q89_leakage_safe_split",
+      "q122_incremental_embedding_dedup"))
   }
 
   test("approx_count_distinct within 5% of exact (q30 contract)") {

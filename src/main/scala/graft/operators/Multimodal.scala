@@ -2081,42 +2081,34 @@ object Multimodal {
   val AudioHashFamily = "audio-energy-v1"
   val VideoHashFamily = "video-dhash-v1"
 
-  private def imageSigs(media: Dataset[MediaFile]): DataFrame =
-    perceptualHash(media).filter(col("valid"))
-      .select(col("doc_id").as("id"), col("dhash").as("sh"))
-
-  private def audioSigs(media: Dataset[MediaFile]): DataFrame =
-    audioFingerprint(media).filter(col("valid"))
-      .select(col("doc_id").as("id"), col("ehash").as("sh"))
-
-  private def videoSigs(media: Dataset[MediaFile], stride: Int): DataFrame =
-    videoFingerprints(media, stride)
-      .select(col("doc_id").as("id"),
-        col("frame_index").cast("long").as("f"), col("dhash").as("sh"))
+  /** `(id, f, sh)` signature rows of a media batch: ONE decode per
+    * payload into the kind's 64-bit fingerprint rows — image dHash
+    * and audio energy-hash as one `f = 0` row per VALID payload, video
+    * as one row per sampled frame (`f` = frame index; an undecodable
+    * video yields zero rows). */
+  private def sigRows(media: Dataset[MediaFile], kind: String,
+      stride: Int = 1): DataFrame = kind match {
+    case "image" => perceptualHash(media).filter(col("valid"))
+      .select(col("doc_id").as("id"), lit(0L).as("f"), col("dhash").as("sh"))
+    case "audio" => audioFingerprint(media).filter(col("valid"))
+      .select(col("doc_id").as("id"), lit(0L).as("f"), col("ehash").as("sh"))
+    case "video" => videoFingerprints(media, stride)
+      .select(col("doc_id").as("id"), col("frame_index").cast("long").as("f"),
+        col("dhash").as("sh"))
+    case other => throw new IllegalArgumentException(
+      s"media kind '$other' (image|audio|video)")
+  }
 
   /** Signature rows `(doc_id, f, sh)` of a `(doc_id, content)` batch
     * for the generic media-curation stream (r14,
-    * `DocStream.curateMediaNearDup`): ONE decode per payload into the
-    * kind's 64-bit fingerprint rows — image dHash and audio
-    * energy-hash as one `f = 0` row per VALID payload, video as one
-    * row per sampled frame (`f` = frame index; an undecodable video
-    * yields zero rows, the same "absent = invalid" census the stream
-    * applies to all three kinds). */
+    * `DocStream.curateMediaNearDup`): [[sigRows]] of the batch's
+    * payloads decoded as `kind` — the same "absent = invalid" census
+    * the stream applies to all three kinds. */
   def mediaSigRows(batch: DataFrame, kind: String, stride: Int = 1): DataFrame = {
     val media = batch.select(col("doc_id"), col("content"))
       .as(Encoders.product[(Long, Array[Byte])])
       .map { case (id, bytes) => MediaFile(id, kind, bytes) }(mediaEnc)
-    kind match {
-      case "image" => perceptualHash(media).filter(col("valid"))
-        .select(col("doc_id"), lit(0L).as("f"), col("dhash").as("sh"))
-      case "audio" => audioFingerprint(media).filter(col("valid"))
-        .select(col("doc_id"), lit(0L).as("f"), col("ehash").as("sh"))
-      case "video" => videoFingerprints(media, stride)
-        .select(col("doc_id"), col("frame_index").cast("long").as("f"),
-          col("dhash").as("sh"))
-      case other => throw new IllegalArgumentException(
-        s"media kind '$other' (image|audio|video)")
-    }
+    sigRows(media, kind, stride).withColumnRenamed("id", "doc_id")
   }
 
   /** The persisted-index hash family of a media kind — probes must
@@ -2132,7 +2124,7 @@ object Multimodal {
   /** Write (or append) the image dHash index for a media batch. */
   def imageHashIndexWrite(media: Dataset[MediaFile], path: String,
       mode: String = "overwrite", bands: Int = 0, ranges: Int = 64): Unit =
-    Dedup.hammingWriteIndex(imageSigs(media), path, ImageHashFamily, 64, mode,
+    Dedup.hammingWriteIndex(sigRows(media, "image"), path, ImageHashFamily, 64, mode,
       bands, ranges)
 
   /** New image batch vs the persisted index (plus itself):
@@ -2140,21 +2132,21 @@ object Multimodal {
   def incrementalImageNearDuplicates(media: Dataset[MediaFile],
       indexPath: String, maxDistance: Int = 7, bands: Int = 8,
       maxBucket: Int = 1000): DataFrame =
-    Dedup.incrementalHammingCandidates(media.sparkSession, imageSigs(media),
+    Dedup.incrementalHammingCandidates(media.sparkSession, sigRows(media, "image"),
         indexPath, ImageHashFamily, 64, maxDistance, bands, maxBucket)
       .select(col("id_a"), col("id_b"), col("distance"))
 
   /** Write (or append) the audio energy-hash index for a media batch. */
   def audioHashIndexWrite(media: Dataset[MediaFile], path: String,
       mode: String = "overwrite", bands: Int = 0, ranges: Int = 64): Unit =
-    Dedup.hammingWriteIndex(audioSigs(media), path, AudioHashFamily, 64, mode,
+    Dedup.hammingWriteIndex(sigRows(media, "audio"), path, AudioHashFamily, 64, mode,
       bands, ranges)
 
   /** New audio batch vs the persisted index (plus itself). */
   def incrementalAudioNearDuplicates(media: Dataset[MediaFile],
       indexPath: String, maxDistance: Int = 7, bands: Int = 8,
       maxBucket: Int = 1000): DataFrame =
-    Dedup.incrementalHammingCandidates(media.sparkSession, audioSigs(media),
+    Dedup.incrementalHammingCandidates(media.sparkSession, sigRows(media, "audio"),
         indexPath, AudioHashFamily, 64, maxDistance, bands, maxBucket)
       .select(col("id_a"), col("id_b"), col("distance"))
 
@@ -2165,7 +2157,7 @@ object Multimodal {
   def videoHashIndexWrite(media: Dataset[MediaFile], path: String,
       stride: Int = 1, mode: String = "overwrite",
       bands: Int = 0, ranges: Int = 64): Unit =
-    Dedup.hammingWriteIndex(videoSigs(media, stride), path, VideoHashFamily, 64, mode,
+    Dedup.hammingWriteIndex(sigRows(media, "video", stride), path, VideoHashFamily, 64, mode,
       bands, ranges)
 
   /** New video batch vs the persisted per-frame index: frame-level
@@ -2178,7 +2170,7 @@ object Multimodal {
       indexPath: String, maxDistance: Int = 7, bands: Int = 8,
       minMatched: Int = 2, stride: Int = 1, maxBucket: Int = 1000): DataFrame =
     Dedup.incrementalHammingCandidates(media.sparkSession,
-        videoSigs(media, stride), indexPath, VideoHashFamily, 64,
+        sigRows(media, "video", stride), indexPath, VideoHashFamily, 64,
         maxDistance, bands, maxBucket)
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_frames_matched"))

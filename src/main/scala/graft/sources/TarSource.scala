@@ -119,8 +119,8 @@ object TarSource {
       * maxFilesPerTrigger admission, AvailableNow drain-target
       * freeze, vanished-file refusal), through the SAME per-file
       * reader incl. payload-skipping column pruning. The natural feed
-      * for `DocStream.curateImageNearDup`: arriving media shards
-      * stream straight into incremental perceptual dedup. */
+      * for `DocStream.curateMediaNearDup(kind = "image")`: arriving
+      * media shards stream straight into incremental perceptual dedup. */
     override def toMicroBatchStream(
         checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
       new FileSetMicroBatchStream(

@@ -194,6 +194,11 @@ object DocStream {
     }
   }
 
+  /** `pollInterval` None → drain-and-stop (AvailableNow), else
+    * tail-follow on that processing-time interval. */
+  private def triggerOf(pollInterval: Option[String]): Trigger =
+    pollInterval.map(Trigger.ProcessingTime(_)).getOrElse(Trigger.AvailableNow())
+
   private def applyGate(df: DataFrame, gate: CrawlGate): DataFrame = gate match {
     case CrawlGate.Quality(min) =>
       df.withColumn("quality", Text.qualityScore(col("text")))
@@ -408,16 +413,13 @@ object DocStream {
       checkpointDir: String,
       maxFilesPerTrigger: Int = 16,
       pollInterval: Option[String] = None): StreamingQuery = {
-    val trigger = pollInterval
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
     spark.readStream.format("graft.sources.WarcSource")
       .option("path", warcDir)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .load()
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(triggerOf(pollInterval))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.operators.Corpus.crawlHealthOf(batch)
           .coalesce(1)
@@ -450,16 +452,13 @@ object DocStream {
       checkpointDir: String,
       maxFilesPerTrigger: Int = 16,
       pollInterval: Option[String] = None): StreamingQuery = {
-    val trigger = pollInterval
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
     spark.readStream.format("graft.sources.WarcSource")
       .option("path", warcDir)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .load()
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(triggerOf(pollInterval))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.operators.Links.hostGraph(
             graft.operators.Links.outlinksOf(batch)
@@ -473,7 +472,8 @@ object DocStream {
   }
 
   /** The [[curateNearDup]] loop over ANY streaming frame with
-    * `(doc_id, text)` columns (extra columns ride into the corpus).
+    * `(doc_id, text)` columns (extra columns ride into the corpus):
+    * the one near-dup loop ([[nearDupLoop]]) with the MinHash kernel.
     *
     * @param compactEvery every K committed micro-batches, compact the
     *        signature index in-stream via
@@ -535,190 +535,26 @@ object DocStream {
     require(32 % probeBands == 0,
       s"indexBands=$indexBands must divide the 32-hash signature " +
         "(the probe's LSH banding follows the index layout)")
-    val trigger = pollInterval
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
-    // Lagging-index repair probe only until this INSTANCE has
-    // committed a batch (r18): batch N+1 only runs after batch N's
-    // body committed both writes (a foreachBatch exception kills the
-    // query), so the crash window the probe repairs can only predate
-    // the instance — a restart is a new instance and probes again.
-    // The probe is a full ids-scan of index + corpus plus an
-    // anti-join PER BATCH; this makes it once per stream lifetime.
-    // Assumes the stream owns its dirs mid-flight (the standing
-    // contract — a concurrent manual CompactIndex preserves content
-    // and serializes under the DirLock, so it never unindexes docs).
-    @volatile var committedOnce = false
-    in.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val batch = preBatch(batch0, batchId)
-        val fs = new org.apache.hadoop.fs.Path(indexDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def pathExists(d: String) =
-          fs.exists(new org.apache.hadoop.fs.Path(s"$d/_SUCCESS"))
-        // the corpus "exists" once ANY part file landed — a crash mid
-        // corpus-commit can leave part files without _SUCCESS, and
-        // keying the replay guard on _SUCCESS alone would re-append
-        // the whole batch on top of the partially committed rows
-        def hasParquet(d: String) = {
-          val path = new org.apache.hadoop.fs.Path(d)
-          fs.exists(path) && fs.listStatus(path)
-            .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        }
-        // the corpus append and the index append are two writes with a
-        // crash window between them — the state pair must CONVERGE on
-        // replay, not be assumed atomic:
-        // 1. corpus exists but index doesn't (crash before batch 0's
-        //    index write): rebuild the index from the corpus wholesale;
-        // 2. index lags the corpus (crash between a later batch's two
-        //    writes): an ids-only anti-join finds the unindexed corpus
-        //    docs (normally zero) and repairs them BEFORE this batch's
-        //    dedup decision — repairing after would let a replayed
-        //    batch (checkpoint lost too) LSH-check new docs against
-        //    the stale index and admit a near-dup of an unindexed
-        //    corpus doc;
-        // 3. checkpoint lost / batch replayed after both writes: the
-        //    corpus-id anti-join empties `fresh`, both writes skip.
-        reliableCheckpointDir.foreach { dir =>
-          if (spark.sparkContext.getCheckpointDir.isEmpty)
-            spark.sparkContext.setCheckpointDir(dir)
-        }
-        // Reliable pins leave rdd-N checkpoint dirs behind: unpersist()
-        // never deletes them and Spark's ContextCleaner only does with
-        // referenceTracking.cleanCheckpoints=true AND GC pressure — a
-        // long-running stream (exactly what this option targets) would
-        // accumulate one dir per pin per batch, unboundedly. Each pin
-        // records its checkpoint dir; the batch deletes them all after
-        // its writes commit (nothing references pinned data across
-        // batches — the next batch re-reads corpusDir).
-        val pinDirs = scala.collection.mutable.ListBuffer[org.apache.hadoop.fs.Path]()
-        def pin(df: DataFrame): DataFrame =
-          if (reliableCheckpointDir.isDefined) {
-            val p = df.checkpoint(true)
-            p.queryExecution.analyzed.collect {
-              case l: org.apache.spark.sql.execution.LogicalRDD =>
-                l.rdd.getCheckpointFile
-            }.flatten.foreach(f => pinDirs += new org.apache.hadoop.fs.Path(f))
-            p
-          } else df.localCheckpoint(true)
-        val corpusExists = hasParquet(corpusDir)
-        if (corpusExists && !pathExists(indexDir))
-          Dedup.minhashWriteIndex(
-            spark.read.parquet(corpusDir).select(col("doc_id"), col("text")),
-            "doc_id", "text", indexDir, mode = "overwrite",
-            bands = indexBands, ranges = indexRanges)
-        val indexExists = pathExists(indexDir)
-        // index repair probe (case 2), BEFORE the decision: ids ONLY —
-        // doc_id vs id columns, no text column touched; texts are
-        // fetched just for the (normally zero) unindexed ids. The id
-        // list derives from reading indexDir, which the repair is
-        // about to append to — pin it first (write-invalidation
-        // hazard, see the pinned-decision comment below).
-        var nRepair = 0L
-        if (corpusExists && indexExists && !committedOnce) {
-          val unindexedIds = pin(
-            spark.read.parquet(corpusDir).select(col("doc_id"))
-              .join(Dedup.minhashIndexFlat(spark, indexDir)
-                .select(col("id").as("doc_id")).distinct(),
-                Seq("doc_id"), "left_anti"))
-          nRepair = unindexedIds.count()
-          if (nRepair > 0) {
-            val unindexed = pin(
-              spark.read.parquet(corpusDir).select(col("doc_id"), col("text"))
-                .join(unindexedIds, Seq("doc_id"), "left_semi"))
-            Dedup.minhashWriteIndex(unindexed, "doc_id", "text", indexDir,
-              mode = "append", bands = indexBands, ranges = indexRanges)
-            graft.Pins.release(unindexed)
-          }
-          graft.Pins.release(unindexedIds)
-        }
-        val kept =
-          if (!corpusExists) {
-            // virgin state: only batch-internal near-dups to resolve
-            val pairs = Dedup.nearDuplicates(batch, "doc_id", "text",
-              minJaccard = minJaccard)
-            batch.join(pairs.select(col("id_b").as("doc_id")).distinct(),
-              Seq("doc_id"), "left_anti")
-          } else {
-            val corpus = spark.read.parquet(corpusDir)
-              .select(col("doc_id"), col("text"))
-            // replay guard: a doc id already accepted into the corpus
-            // is a replay, not new work (its signature self-pair is
-            // excluded by id equality, so the LSH check alone would
-            // re-admit it)
-            val fresh = batch.join(corpus.select(col("doc_id")),
-              Seq("doc_id"), "left_anti")
-            val pairs = Dedup.incrementalNearDuplicates(spark, fresh,
-              "doc_id", "text", indexDir, corpus, minJaccard = minJaccard,
-              bands = probeBands)
-            // pairs are (min, max)-normalized, so the batch doc can sit
-            // on either side: a batch doc dies when its pair partner is
-            // a corpus doc (either side), or a lower-id batch doc
-            val bIds = fresh.select(col("doc_id")).distinct()
-            val flagged = pairs
-              .join(bIds.select(col("doc_id").as("id_a"), lit(1).as("_ain")),
-                Seq("id_a"), "left")
-              .join(bIds.select(col("doc_id").as("id_b"), lit(1).as("_bin")),
-                Seq("id_b"), "left")
-            val drop = flagged.select(
-              when(col("_ain").isNotNull && col("_bin").isNotNull, col("id_b"))
-                .when(col("_ain").isNotNull, col("id_a"))
-                .otherwise(col("id_b")).as("doc_id")).distinct()
-            fresh.join(drop, Seq("doc_id"), "left_anti")
-          }
-        // PIN the decision before any side effect: the corpus append
-        // below invalidates every cached plan whose lineage reads
-        // corpusDir (the dedup check does) — a lazily-cached `kept`
-        // would silently RECOMPUTE against the post-append corpus and
-        // dedup the batch against itself (observed: empty index
-        // writes). localCheckpoint truncates the lineage eagerly, so
-        // both writes see the same decided rows.
-        val pinned = pin(kept)
-        try {
-          val n = pinned.count()
-          println(s"[neardup] batch=$batchId kept=$n repair=$nRepair")
-          if (n > 0) {
-            // append under the corpus directory's append lock (r15):
-            // serializes against a manual compactor's rewrite lock,
-            // the same discipline every index append already follows
-            Dedup.indexWriteLocked(spark, corpusDir) {
-              pinned.write.mode("append").parquet(corpusDir)
-            }
-            // stale-listing hygiene: this session read corpusDir for
-            // the dedup check and reads it again next batch
-            spark.catalog.refreshByPath(corpusDir)
-            // `indexExists && corpusExists`, not `indexExists` (r13,
-            // advisor): a stale index left behind by a deleted corpus
-            // was deduped around (the !corpusExists branch ignores the
-            // index) yet appended into — ghost ids accumulate and
-            // break both the index⊆corpus repair invariant and the
-            // incremental kernel's batch-ids-disjoint contract.
-            // An index without a corpus is garbage: overwrite it.
-            Dedup.minhashWriteIndex(pinned.select(col("doc_id"), col("text")),
-              "doc_id", "text", indexDir,
-              mode = if (indexExists && corpusExists) "append" else "overwrite",
-              bands = indexBands, ranges = indexRanges)
-          }
-          maybeCompact(spark, indexDir, batchId,
-            compactEvery, compactTargetFiles, "neardup", "index")
-          maybeCompact(spark, corpusDir, batchId,
-            corpusCompactEvery, corpusCompactTargetFiles, "neardup", "corpus")
-          committedOnce = true // this instance's state pair is consistent
-        } finally {
-          // RDD-level: Dataset.unpersist is a no-op for checkpoint
-          // pins (graft.Pins scaladoc) — with it, every batch leaked
-          // its decision pin for the life of the stream
-          graft.Pins.release(pinned)
-          pinDirs.foreach { p =>
-            try p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-            catch { case _: java.io.IOException => () }
-          }
-        }
-        ()
-      }
-      .start()
+    val kernel = new SigKernel("neardup") {
+      override def prepare(batch: DataFrame, batchId: Long,
+          pin: DataFrame => DataFrame): (DataFrame, String) =
+        (preBatch(batch, batchId), "")
+      def writeIndex(rows: DataFrame, mode: String): Unit =
+        Dedup.minhashWriteIndex(rows.select(col("doc_id"), col("text")),
+          "doc_id", "text", indexDir, mode = mode,
+          bands = indexBands, ranges = indexRanges)
+      def indexIds: DataFrame =
+        Dedup.minhashIndexFlat(spark, indexDir).select(col("id").as("doc_id"))
+      def batchPairs(batch: DataFrame): DataFrame =
+        Dedup.nearDuplicates(batch, "doc_id", "text", minJaccard = minJaccard)
+      def indexPairs(fresh: DataFrame, corpus: DataFrame): DataFrame =
+        Dedup.incrementalNearDuplicates(spark, fresh, "doc_id", "text",
+          indexDir, corpus.select(col("doc_id"), col("text")),
+          minJaccard = minJaccard, bands = probeBands)
+    }
+    nearDupLoop(spark, in, kernel, corpusDir, indexDir, checkpointDir,
+      pollInterval, reliableCheckpointDir, compactEvery, compactTargetFiles,
+      corpusCompactEvery, corpusCompactTargetFiles)
   }
 
   /** Streaming NEAR-duplicate curation for EMBEDDINGS (r15, closing
@@ -728,17 +564,13 @@ object DocStream {
     * hyperplane-LSH signature index —
     * [[graft.operators.Similarity.cosineWriteIndex]] /
     * [[graft.operators.Similarity.incrementalCosineNearDuplicates]]
-    * — with [[curateNearDupStream]]'s crash-convergence skeleton
-    * applied verbatim: corpus without an index marker → rebuild the
-    * index from the corpus's vector column; index lagging the corpus
-    * → ids-only repair BEFORE the dedup decision; replayed batches
-    * emptied by the corpus-id anti-join; decisions pinned
-    * (`localCheckpoint`) before either write; in-stream index AND
-    * corpus compaction; banded-layout pass-through (the probe's
-    * banding follows the index geometry — validated at `start()`).
-    * The SemDeDup/ANN arriving-batch setting: embedding drops land
-    * as files, near-copies (cosine ≥ `minCosine`) of anything seen
-    * in ANY earlier batch are dropped, survivors grow corpus + index.
+    * — on the one near-dup loop ([[nearDupLoop]]: rebuild, repair,
+    * replay guard, pinned decision, in-stream compaction) with
+    * banded-layout pass-through (the probe's banding follows the
+    * index geometry — validated at `start()`). The SemDeDup/ANN
+    * arriving-batch setting: embedding drops land as files,
+    * near-copies (cosine ≥ `minCosine`) of anything seen in ANY
+    * earlier batch are dropped, survivors grow corpus + index.
     *
     * The index stores `(id, sig)` only (16 B/row); exact-cosine
     * verification fetches vectors for CANDIDATE ids from the corpus
@@ -770,110 +602,24 @@ object DocStream {
       s"indexBands=$indexBands must be 0 (flat layout) or equal the probe " +
         s"banding bands=$bands — LSH banding geometry is baked at write")
     require(bits % bands == 0, "bands must divide bits")
-    val trigger = pollInterval
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
-    // repair probe only until this instance commits a batch (r18 —
-    // the curateNearDupStream rationale, verbatim)
-    @volatile var committedOnce = false
-    in.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fs = new org.apache.hadoop.fs.Path(indexDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def hasParquet(d: String) = {
-          val p = new org.apache.hadoop.fs.Path(d)
-          fs.exists(p) && fs.listStatus(p)
-            .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        }
-        def markerExists() =
-          fs.exists(graft.util.IndexMarker.markerPath(indexDir))
-        def corpusVecs = spark.read.parquet(corpusDir)
-          .select(col("doc_id"), col("vec"))
-        val corpusExists = hasParquet(corpusDir)
-        if (corpusExists && !markerExists())
-          Similarity.cosineWriteIndex(corpusVecs, "doc_id", "vec", indexDir,
-            dim = dim, bits = bits, seed = seed, mode = "overwrite",
-            bands = indexBands, ranges = indexRanges)
-        val indexExists = markerExists()
-        // lagging-index repair BEFORE the decision (ids only; vectors
-        // fetched just for the normally-zero unindexed ids)
-        if (corpusExists && indexExists && !committedOnce) {
-          val unindexedIds = corpusVecs.select(col("doc_id"))
-            .join(Similarity.cosineIndexFlat(spark, indexDir)
-              .select(col("id").as("doc_id")).distinct(),
-              Seq("doc_id"), "left_anti")
-            .localCheckpoint(true) // pin BEFORE appending the path it reads
-          try {
-            if (unindexedIds.count() > 0) {
-              val unindexed = corpusVecs
-                .join(unindexedIds, Seq("doc_id"), "left_semi")
-                .localCheckpoint(true)
-              try Similarity.cosineWriteIndex(unindexed, "doc_id", "vec",
-                indexDir, dim = dim, bits = bits, seed = seed,
-                mode = "append", bands = indexBands, ranges = indexRanges)
-              finally graft.Pins.release(unindexed)
-            }
-          } finally graft.Pins.release(unindexedIds)
-        }
-        val kept =
-          if (!corpusExists) {
-            // virgin state: only batch-internal near-dups to resolve
-            val pairs = Similarity.cosineNearDuplicates(batch, "doc_id",
-              "vec", minCosine, dim, bits, bands, seed, maxBucket,
-              maxSigHamming)
-            batch.join(pairs.select(col("id_b").as("doc_id")).distinct(),
-              Seq("doc_id"), "left_anti")
-          } else {
-            val fresh = batch.join(corpusVecs.select(col("doc_id")),
-              Seq("doc_id"), "left_anti")
-            val pairs = Similarity.incrementalCosineNearDuplicates(spark,
-              fresh, "doc_id", "vec", indexDir, corpusVecs,
-              minCosine, dim, bits, bands, seed, maxBucket, maxSigHamming)
-            // pairs are (min, max)-normalized: a batch doc dies when
-            // its partner is a corpus doc (either side) or a lower-id
-            // batch doc — the curateNearDupStream tie-break
-            val bIds = fresh.select(col("doc_id")).distinct()
-            val flagged = pairs
-              .join(bIds.select(col("doc_id").as("id_a"), lit(1).as("_ain")),
-                Seq("id_a"), "left")
-              .join(bIds.select(col("doc_id").as("id_b"), lit(1).as("_bin")),
-                Seq("id_b"), "left")
-            val drop = flagged.select(
-              when(col("_ain").isNotNull && col("_bin").isNotNull, col("id_b"))
-                .when(col("_ain").isNotNull, col("id_a"))
-                .otherwise(col("id_b")).as("doc_id")).distinct()
-            fresh.join(drop, Seq("doc_id"), "left_anti")
-          }
-        // pin the decision before any side effect (write-invalidation
-        // hazard — the curateNearDupStream lesson)
-        val pinned = kept.localCheckpoint(true)
-        try {
-          val n = pinned.count()
-          println(s"[embdedup] batch=$batchId kept=$n")
-          if (n > 0) {
-            graft.operators.Dedup.indexWriteLocked(spark, corpusDir) {
-              pinned.write.mode("append").parquet(corpusDir)
-            }
-            spark.catalog.refreshByPath(corpusDir)
-            // `indexExists && corpusExists`: a stale index over a
-            // deleted corpus is garbage — overwrite, never append
-            Similarity.cosineWriteIndex(
-              pinned.select(col("doc_id"), col("vec")), "doc_id", "vec",
-              indexDir, dim = dim, bits = bits, seed = seed,
-              mode = if (indexExists && corpusExists) "append" else "overwrite",
-              bands = indexBands, ranges = indexRanges)
-          }
-          maybeCompact(spark, indexDir, batchId,
-            compactEvery, compactTargetFiles, "embdedup", "index")
-          maybeCompact(spark, corpusDir, batchId,
-            corpusCompactEvery, corpusCompactTargetFiles, "embdedup", "corpus")
-          committedOnce = true // this instance's state pair is consistent
-        } finally graft.Pins.release(pinned)
-        ()
-      }
-      .start()
+    val kernel = new SigKernel("embdedup") {
+      def writeIndex(rows: DataFrame, mode: String): Unit =
+        Similarity.cosineWriteIndex(rows.select(col("doc_id"), col("vec")),
+          "doc_id", "vec", indexDir, dim = dim, bits = bits, seed = seed,
+          mode = mode, bands = indexBands, ranges = indexRanges)
+      def indexIds: DataFrame =
+        Similarity.cosineIndexFlat(spark, indexDir).select(col("id").as("doc_id"))
+      def batchPairs(batch: DataFrame): DataFrame =
+        Similarity.cosineNearDuplicates(batch, "doc_id", "vec", minCosine, dim,
+          bits, bands, seed, maxBucket, maxSigHamming)
+      def indexPairs(fresh: DataFrame, corpus: DataFrame): DataFrame =
+        Similarity.incrementalCosineNearDuplicates(spark, fresh, "doc_id", "vec",
+          indexDir, corpus.select(col("doc_id"), col("vec")),
+          minCosine, dim, bits, bands, seed, maxBucket, maxSigHamming)
+    }
+    nearDupLoop(spark, in, kernel, corpusDir, indexDir, checkpointDir,
+      pollInterval, None, compactEvery, compactTargetFiles,
+      corpusCompactEvery, corpusCompactTargetFiles)
   }
 
   /** Run the curation to parquet with checkpointed exactly-once file
@@ -886,15 +632,12 @@ object DocStream {
       minQuality: Double = 0.2,
       maxFilesPerTrigger: Int = 100,
       pollInterval: Option[String] = None): StreamingQuery = {
-    val trigger = pollInterval
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
     curatedStream(spark, inputDir, minQuality, maxFilesPerTrigger)
       .writeStream
       .format("parquet")
       .option("path", outputDir)
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(triggerOf(pollInterval))
       .start()
   }
 
@@ -915,9 +658,6 @@ object DocStream {
       nShards: Int = 4,
       maxFilesPerTrigger: Int = 100,
       pollInterval: Option[String] = None): StreamingQuery = {
-    val trigger = pollInterval
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
     curatedStream(spark, inputDir, minQuality, maxFilesPerTrigger)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -928,7 +668,7 @@ object DocStream {
         ()
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(triggerOf(pollInterval))
       .start()
   }
 
@@ -941,162 +681,33 @@ object DocStream {
     * md5-derived record ids, per-JVM-deterministic gzip) and the
     * sink's temp-file + atomic rename make a replayed batch rewrite
     * the same paths with the same bytes. */
-  /** Streaming NEAR-duplicate curation for IMAGES (r12) — the media
-    * sibling of [[curateNearDupStream]]: each micro-batch of
-    * `(doc_id, content)` rows (extra columns ride into the corpus)
-    * is decoded ONCE to dHash signatures, checked against the
-    * accumulated hamming index
-    * ([[graft.operators.Dedup.incrementalHammingCandidates]]) plus
-    * itself, and the survivors append to the corpus (WITH their
-    * signature column — so index rebuild/repair after a crash never
-    * re-decodes media bytes) and to the index. Undecodable payloads
-    * are dropped and counted loudly in the batch line.
-    *
-    * Crash convergence mirrors the text loop: corpus without an
-    * index marker → rebuild the index from the corpus's signature
-    * column; index lagging the corpus → ids-only repair BEFORE the
-    * dedup decision; replayed batches are emptied by the corpus-id
-    * anti-join. Decisions are pinned (`localCheckpoint`) before
-    * either write — the corpus append invalidates cached plans whose
-    * lineage reads it (the [[curateNearDupStream]] lesson). */
-  def curateImageNearDup(
+  def curateToWarcShards(
       spark: SparkSession,
-      in: DataFrame,
-      corpusDir: String,
-      indexDir: String,
+      inputDir: String,
+      outputDir: String,
       checkpointDir: String,
-      maxDistance: Int = 7,
-      bands: Int = 8,
-      maxBucket: Int = 1000,
-      pollInterval: Option[String] = None,
-      indexBands: Int = 0, indexRanges: Int = 64,
-      compactEvery: Int = 0, compactTargetFiles: Int = 64,
-      corpusCompactEvery: Int = 0, corpusCompactTargetFiles: Int = 64): StreamingQuery = {
-    import graft.operators.{Dedup, Multimodal}
-    // fail at start(), not on trigger 2 (r14, advisor): the hamming
-    // probe requires idxBands == bands, and a mismatched indexBands
-    // writes trigger 1's index then crashes every later trigger
-    require(indexBands == 0 || indexBands == bands,
-      s"indexBands=$indexBands must be 0 (flat layout) or equal the probe " +
-        s"banding bands=$bands — hamming banding geometry is baked at write")
-    val trigger = pollInterval
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
-    // repair probe only until this instance commits a batch (r18 —
-    // the curateNearDupStream rationale, verbatim)
-    @volatile var committedOnce = false
-    in.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        import spark.implicits._
-        val fsPath = new org.apache.hadoop.fs.Path(indexDir)
-        val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def hasParquet(d: String) = {
-          val p = new org.apache.hadoop.fs.Path(d)
-          fs.exists(p) && fs.listStatus(p)
-            .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        }
-        def markerExists() =
-          fs.exists(graft.util.IndexMarker.markerPath(indexDir))
-        val media = batch0.select(col("doc_id"), col("content"))
-          .as[(Long, Array[Byte])]
-          .map { case (id, bytes) => Multimodal.MediaFile(id, "image", bytes) }(
-            Multimodal.mediaEnc)
-        // decode once, pin: `batch` and the invalid census both derive
-        // from it, and media decode is the expensive step
-        val hashed = Multimodal.perceptualHash(media).toDF().localCheckpoint(true)
-        try {
-          val nInvalid = hashed.filter(!col("valid")).count()
-          val batch = batch0.join(
-            hashed.filter(col("valid"))
-              .select(col("doc_id"), col("dhash").as("sh")), Seq("doc_id"))
-          val corpusExists = hasParquet(corpusDir)
-          if (corpusExists && !markerExists())
-            Dedup.hammingWriteIndex(
-              spark.read.parquet(corpusDir).select(col("doc_id").as("id"), col("sh")),
-              indexDir, Multimodal.ImageHashFamily, 64, mode = "overwrite",
-              bands = indexBands, ranges = indexRanges)
-          val indexExists = markerExists()
-          // lagging-index repair BEFORE the decision (ids only; the
-          // signature column rides in the corpus, no re-decode)
-          if (corpusExists && indexExists && !committedOnce) {
-            val unindexed = spark.read.parquet(corpusDir)
-              .select(col("doc_id").as("id"), col("sh"))
-              .join(Dedup.hammingIndexFlat(spark, indexDir)
-                .select(col("id")).distinct(),
-                Seq("id"), "left_anti")
-              .localCheckpoint(true) // pin BEFORE appending the path it reads
-            try {
-              if (unindexed.count() > 0)
-                Dedup.hammingWriteIndex(unindexed, indexDir,
-                  Multimodal.ImageHashFamily, 64, mode = "append",
-                  bands = indexBands, ranges = indexRanges)
-            } finally graft.Pins.release(unindexed)
-          }
-          val kept =
-            if (!corpusExists) {
-              val pairs = Dedup.hammingCandidates(
-                batch.select(col("doc_id").as("id"), col("sh")),
-                64, maxDistance, bands, maxBucket)
-              batch.join(pairs.select(col("id_b").as("doc_id")).distinct(),
-                Seq("doc_id"), "left_anti")
-            } else {
-              val fresh = batch.join(
-                spark.read.parquet(corpusDir).select(col("doc_id")),
-                Seq("doc_id"), "left_anti")
-              val pairs = Dedup.incrementalHammingCandidates(spark,
-                fresh.select(col("doc_id").as("id"), col("sh")), indexDir,
-                Multimodal.ImageHashFamily, 64, maxDistance, bands, maxBucket)
-              val bIds = fresh.select(col("doc_id")).distinct()
-              val flagged = pairs
-                .join(bIds.select(col("doc_id").as("id_a"), lit(1).as("_ain")),
-                  Seq("id_a"), "left")
-                .join(bIds.select(col("doc_id").as("id_b"), lit(1).as("_bin")),
-                  Seq("id_b"), "left")
-              val drop = flagged.select(
-                when(col("_ain").isNotNull && col("_bin").isNotNull, col("id_b"))
-                  .when(col("_ain").isNotNull, col("id_a"))
-                  .otherwise(col("id_b")).as("doc_id")).distinct()
-              fresh.join(drop, Seq("doc_id"), "left_anti")
-            }
-          val pinned = kept.localCheckpoint(true)
-          try {
-            val n = pinned.count()
-            println(s"[mediadedup] batch=$batchId kept=$n invalid=$nInvalid")
-            if (n > 0) {
-              Dedup.indexWriteLocked(spark, corpusDir) {
-                pinned.write.mode("append").parquet(corpusDir)
-              }
-              spark.catalog.refreshByPath(corpusDir)
-              // `indexExists && corpusExists` (r13, advisor): a stale
-              // marker over a deleted corpus was deduped around yet
-              // appended into — ghost ids. Overwrite instead.
-              Dedup.hammingWriteIndex(
-                pinned.select(col("doc_id").as("id"), col("sh")), indexDir,
-                Multimodal.ImageHashFamily, 64,
-                mode = if (indexExists && corpusExists) "append" else "overwrite",
-                bands = indexBands, ranges = indexRanges)
-            }
-            // in-stream compaction (index r14, corpus r15) — the
-            // curateNearDupStream contract: stream is the only
-            // appender, conflict = skip
-            maybeCompact(spark, indexDir, batchId,
-              compactEvery, compactTargetFiles, "mediadedup", "index")
-            maybeCompact(spark, corpusDir, batchId,
-              corpusCompactEvery, corpusCompactTargetFiles, "mediadedup", "corpus")
-            committedOnce = true // this instance's state pair is consistent
-          } finally graft.Pins.release(pinned)
-        } finally graft.Pins.release(hashed)
+      minQuality: Double = 0.2,
+      nShards: Int = 4,
+      maxFilesPerTrigger: Int = 100,
+      pollInterval: Option[String] = None): StreamingQuery = {
+    curatedStream(spark, inputDir, minQuality, maxFilesPerTrigger)
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        graft.sinks.WarcShards.write(
+          batch.toDF().select(col("doc_id").cast(StringType).as("k"),
+            concat(lit("urn:graft:doc/"), col("doc_id")).as("u"),
+            col("text").cast(BinaryType).as("p")),
+          "k", "u", "p", s"$outputDir/batch=$id", nShards)
         ()
       }
+      .option("checkpointLocation", checkpointDir)
+      .trigger(triggerOf(pollInterval))
       .start()
   }
 
   /** Streaming NEAR-duplicate curation for ANY media modality (r14)
-    * — the [[curateImageNearDup]] loop generalized over the three
-    * 64-bit fingerprint kinds (`image` dHash / `audio` energy-hash /
-    * `video` per-frame dHash), completing the streaming half of the
+    * over the three 64-bit fingerprint kinds (`image` dHash / `audio`
+    * energy-hash / `video` per-frame dHash), the streaming half of the
     * one-kernel media story: each micro-batch of `(doc_id, content)`
     * rows decodes ONCE to signature rows
     * ([[graft.operators.Multimodal.mediaSigRows]] — video yields one
@@ -1111,13 +722,12 @@ object DocStream {
     * `minMatched` for video, 1 for the frameless kinds (where the
     * frame key is constant 0 and the kernel degenerates to the
     * frameless one). Undecodable payloads (zero signature rows) are
-    * dropped and counted loudly.
+    * dropped and counted loudly in the batch line (`invalid=N`).
     *
-    * Crash convergence, pinning, in-stream compaction and the
-    * banded-layout pass-through are [[curateNearDupStream]]'s,
-    * applied to the media index. [[curateImageNearDup]] remains the
-    * image-specific entry with its flat `sh` corpus column; new
-    * pipelines should prefer this one.
+    * Crash convergence, pinning and in-stream compaction are the one
+    * near-dup loop's ([[nearDupLoop]]), applied to the media index;
+    * `indexBands` must be 0 (flat) or equal `bands` (checked at
+    * `start()`).
     *
     * `stride` (video) is part of the index's frame geometry but NOT
     * of its family marker (the batch API's documented caveat,
@@ -1147,79 +757,181 @@ object DocStream {
       s"indexBands=$indexBands must be 0 (flat layout) or equal the probe " +
         s"banding bands=$bands — hamming banding geometry is baked at write")
     val minMatchedOf = if (kind == "video") minMatched else 1
-    val trigger = pollInterval
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
-    // repair probe only until this instance commits a batch (r18 —
-    // the curateNearDupStream rationale, verbatim)
+    def sigRows(rows: DataFrame): DataFrame =
+      rows.select(col("doc_id"), explode(col("sigs")).as("_s"))
+        .select(col("doc_id").as("id"), col("_s.f").as("f"), col("_s.sh").as("sh"))
+    def admitted(framePairs: DataFrame): DataFrame = framePairs
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("_n"))
+      .filter(col("_n") >= minMatchedOf)
+      .select(col("id_a"), col("id_b"))
+    val kernel = new SigKernel(s"mediadedup:$kind") {
+      override def prepare(batch: DataFrame, batchId: Long,
+          pin: DataFrame => DataFrame): (DataFrame, String) = {
+        // decode once, pin: every decision below derives from the
+        // signature rows, and media decode is the expensive step
+        val sigs = pin(Multimodal.mediaSigRows(batch, kind, stride))
+        val nInvalid = batch.join(sigs.select(col("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti").count()
+        (batch.join(
+          sigs.groupBy(col("doc_id"))
+            .agg(collect_list(struct(col("f"), col("sh"))).as("sigs")),
+          Seq("doc_id")), s" invalid=$nInvalid")
+      }
+      def writeIndex(rows: DataFrame, mode: String): Unit =
+        Dedup.hammingWriteIndex(sigRows(rows), indexDir, family, 64,
+          mode = mode, bands = indexBands, ranges = indexRanges)
+      def indexIds: DataFrame =
+        Dedup.hammingIndexFlat(spark, indexDir).select(col("id").as("doc_id"))
+      def batchPairs(batch: DataFrame): DataFrame =
+        admitted(Dedup.hammingCandidatesFramed(sigRows(batch),
+          64, maxDistance, bands, maxBucket))
+      def indexPairs(fresh: DataFrame, corpus: DataFrame): DataFrame =
+        admitted(Dedup.incrementalHammingCandidates(spark, sigRows(fresh),
+          indexDir, family, 64, maxDistance, bands, maxBucket))
+    }
+    nearDupLoop(spark, in, kernel, corpusDir, indexDir, checkpointDir,
+      pollInterval, None, compactEvery, compactTargetFiles,
+      corpusCompactEvery, corpusCompactTargetFiles)
+  }
+
+  /** One modality's signatures, as the one near-dup loop
+    * ([[nearDupLoop]]) consumes them. Rows are corpus-shaped: `doc_id`
+    * plus the modality's payload column, extra columns riding along.
+    * Pairs are `(id_a, id_b)` with `id_a < id_b`. */
+  private abstract class SigKernel(val tag: String) {
+    /** The micro-batch to decide on, and a suffix for its batch line;
+      * `pin` pins a frame until the batch ends. Default: as arrived. */
+    def prepare(batch: DataFrame, batchId: Long,
+        pin: DataFrame => DataFrame): (DataFrame, String) = (batch, "")
+    /** Write corpus-shaped rows to the index (`overwrite`/`append`).
+      * Every index writer commits its parquet first and its
+      * [[graft.util.IndexMarker]] last. */
+    def writeIndex(rows: DataFrame, mode: String): Unit
+    /** The index's flat ids, as `doc_id`. */
+    def indexIds: DataFrame
+    /** Near-dup pairs within one batch (no corpus yet). */
+    def batchPairs(batch: DataFrame): DataFrame
+    /** Near-dup pairs touching `fresh`, against the index and itself;
+      * `corpus` (the whole corpus read) serves verification fetches. */
+    def indexPairs(fresh: DataFrame, corpus: DataFrame): DataFrame
+  }
+
+  /** The corpus + index protocol of every near-dup stream, spelled
+    * once. The corpus append and the index write are two writes with a
+    * crash window between them, so the pair must CONVERGE on replay,
+    * not be assumed atomic. The index's commit point is its marker
+    * (written after the parquet commit), never `_SUCCESS`:
+    * 1. corpus exists but the index marker doesn't (a crash before or
+    *    inside the first index write, or a legacy unmarked index):
+    *    rebuild the index from the corpus wholesale — the index derives
+    *    from the corpus, so the rebuild has the same content;
+    * 2. index lags the corpus (crash between a later batch's two
+    *    writes): an ids-only anti-join finds the unindexed corpus docs
+    *    (normally zero) and repairs them BEFORE this batch's decision —
+    *    repairing after would let a replayed batch (checkpoint lost
+    *    too) check new docs against the stale index and admit a
+    *    near-dup of an unindexed corpus doc;
+    * 3. checkpoint lost / batch replayed after both writes: the
+    *    corpus-id anti-join empties `fresh`, both writes skip.
+    *
+    * The repair probe (a full ids-scan of index + corpus) runs only
+    * until this INSTANCE has committed a batch (r18): batch N+1 only
+    * runs after batch N's body committed both writes (a foreachBatch
+    * exception kills the query), so the crash window it repairs can
+    * only predate the instance — a restart is a new instance and
+    * probes again. Assumes the stream owns its dirs mid-flight (a
+    * concurrent manual CompactIndex preserves content and serializes
+    * under the DirLock, so it never unindexes docs).
+    *
+    * Pins: `reliableCheckpointDir` None → `localCheckpoint` (eager,
+    * executor-memory blocks); Some(dir) → reliable `Dataset.checkpoint`
+    * into `dir`. Every pin of a batch is released in the batch's
+    * `finally` by [[graft.Pins.release]], which also deletes a
+    * reliable pin's `rdd-N` dir — nothing else does, and a long
+    * stream would leak one per pin per batch. Nothing references
+    * pinned data across batches: the next batch re-reads `corpusDir`. */
+  private def nearDupLoop(
+      spark: SparkSession,
+      in: DataFrame,
+      kernel: SigKernel,
+      corpusDir: String,
+      indexDir: String,
+      checkpointDir: String,
+      pollInterval: Option[String],
+      reliableCheckpointDir: Option[String],
+      compactEvery: Int, compactTargetFiles: Int,
+      corpusCompactEvery: Int, corpusCompactTargetFiles: Int): StreamingQuery = {
+    import graft.operators.Dedup
     @volatile var committedOnce = false
     in.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(triggerOf(pollInterval))
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val fs = new org.apache.hadoop.fs.Path(indexDir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // the corpus "exists" once ANY part file landed — a crash mid
+        // corpus-commit can leave part files without _SUCCESS, and
+        // keying the replay guard on _SUCCESS alone would re-append
+        // the whole batch on top of the partially committed rows
         def hasParquet(d: String) = {
           val p = new org.apache.hadoop.fs.Path(d)
           fs.exists(p) && fs.listStatus(p)
             .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
         }
-        def markerExists() =
+        def indexMarked() =
           fs.exists(graft.util.IndexMarker.markerPath(indexDir))
-        // decode once, pin: every decision below derives from the
-        // signature rows, and media decode is the expensive step
-        val sigs = Multimodal.mediaSigRows(batch0, kind, stride)
-          .localCheckpoint(true)
+        reliableCheckpointDir.foreach { dir =>
+          if (spark.sparkContext.getCheckpointDir.isEmpty)
+            spark.sparkContext.setCheckpointDir(dir)
+        }
+        val pins = scala.collection.mutable.ListBuffer[DataFrame]()
+        def pin(df: DataFrame): DataFrame = {
+          val p = if (reliableCheckpointDir.isDefined) df.checkpoint(true)
+            else df.localCheckpoint(true)
+          pins += p
+          p
+        }
         try {
-          val sigDocs = sigs.select(col("doc_id")).distinct()
-          val nInvalid = batch0.join(sigDocs, Seq("doc_id"), "left_anti").count()
-          val batch = batch0.join(
-            sigs.groupBy(col("doc_id"))
-              .agg(collect_list(struct(col("f"), col("sh"))).as("sigs")),
-            Seq("doc_id"))
-          def corpusSigRows = spark.read.parquet(corpusDir)
-            .select(col("doc_id"), explode(col("sigs")).as("_s"))
-            .select(col("doc_id").as("id"), col("_s.f").as("f"),
-              col("_s.sh").as("sh"))
+          val (batch, note) = kernel.prepare(batch0, batchId, pin)
           val corpusExists = hasParquet(corpusDir)
-          if (corpusExists && !markerExists())
-            Dedup.hammingWriteIndex(corpusSigRows, indexDir, family, 64,
-              mode = "overwrite", bands = indexBands, ranges = indexRanges)
-          val indexExists = markerExists()
-          // lagging-index repair BEFORE the decision (signature rows
-          // ride the corpus, no re-decode)
+          if (corpusExists && !indexMarked()) // case 1
+            kernel.writeIndex(spark.read.parquet(corpusDir), "overwrite")
+          val indexExists = indexMarked()
+          // case 2, BEFORE the decision: ids ONLY; payloads are fetched
+          // just for the (normally zero) unindexed ids. The id list
+          // derives from reading indexDir, which the repair is about to
+          // append to — pin it first (the write-invalidation hazard
+          // below)
+          var nRepair = 0L
           if (corpusExists && indexExists && !committedOnce) {
-            val unindexed = corpusSigRows
-              .join(Dedup.hammingIndexFlat(spark, indexDir)
-                .select(col("id")).distinct(), Seq("id"), "left_anti")
-              .localCheckpoint(true) // pin BEFORE appending the path it reads
-            try {
-              if (unindexed.count() > 0)
-                Dedup.hammingWriteIndex(unindexed, indexDir, family, 64,
-                  mode = "append", bands = indexBands, ranges = indexRanges)
-            } finally graft.Pins.release(unindexed)
+            val unindexedIds = pin(
+              spark.read.parquet(corpusDir).select(col("doc_id"))
+                .join(kernel.indexIds.distinct(), Seq("doc_id"), "left_anti"))
+            nRepair = unindexedIds.count()
+            if (nRepair > 0)
+              kernel.writeIndex(spark.read.parquet(corpusDir)
+                .join(unindexedIds, Seq("doc_id"), "left_semi"), "append")
           }
-          def admitted(framePairs: DataFrame): DataFrame = framePairs
-            .groupBy(col("id_a"), col("id_b"))
-            .agg(count(lit(1)).as("_n"))
-            .filter(col("_n") >= minMatchedOf)
-            .select(col("id_a"), col("id_b"))
           val kept =
             if (!corpusExists) {
-              val pairs = admitted(Dedup.hammingCandidatesFramed(
-                sigs.select(col("doc_id").as("id"), col("f"), col("sh")),
-                64, maxDistance, bands, maxBucket))
+              // virgin state: only batch-internal near-dups to resolve
+              val pairs = kernel.batchPairs(batch)
               batch.join(pairs.select(col("id_b").as("doc_id")).distinct(),
                 Seq("doc_id"), "left_anti")
             } else {
-              val fresh = batch.join(
-                spark.read.parquet(corpusDir).select(col("doc_id")),
+              val corpus = spark.read.parquet(corpusDir)
+              // replay guard (case 3): a doc id already accepted into
+              // the corpus is a replay, not new work (its signature
+              // self-pair is excluded by id equality, so the pair check
+              // alone would re-admit it)
+              val fresh = batch.join(corpus.select(col("doc_id")),
                 Seq("doc_id"), "left_anti")
-              val freshSigs = sigs
-                .join(fresh.select(col("doc_id")), Seq("doc_id"), "left_semi")
-                .select(col("doc_id").as("id"), col("f"), col("sh"))
-              val pairs = admitted(Dedup.incrementalHammingCandidates(spark,
-                freshSigs, indexDir, family, 64, maxDistance, bands, maxBucket))
+              val pairs = kernel.indexPairs(fresh, corpus)
+              // pairs are (min, max)-normalized, so the batch doc can
+              // sit on either side: a batch doc dies when its pair
+              // partner is a corpus doc (either side), or a lower-id
+              // batch doc — greedy, deterministic by construction
               val bIds = fresh.select(col("doc_id")).distinct()
               val flagged = pairs
                 .join(bIds.select(col("doc_id").as("id_a"), lit(1).as("_ain")),
@@ -1232,60 +944,44 @@ object DocStream {
                   .otherwise(col("id_b")).as("doc_id")).distinct()
               fresh.join(drop, Seq("doc_id"), "left_anti")
             }
-          val pinned = kept.localCheckpoint(true)
-          try {
-            val n = pinned.count()
-            println(s"[mediadedup:$kind] batch=$batchId kept=$n invalid=$nInvalid")
-            if (n > 0) {
-              Dedup.indexWriteLocked(spark, corpusDir) {
-                pinned.write.mode("append").parquet(corpusDir)
-              }
-              spark.catalog.refreshByPath(corpusDir)
-              Dedup.hammingWriteIndex(
-                pinned.select(col("doc_id"), explode(col("sigs")).as("_s"))
-                  .select(col("doc_id").as("id"), col("_s.f").as("f"),
-                    col("_s.sh").as("sh")),
-                indexDir, family, 64,
-                mode = if (indexExists && corpusExists) "append" else "overwrite",
-                bands = indexBands, ranges = indexRanges)
+          // PIN the decision before any side effect: the corpus append
+          // below invalidates every cached plan whose lineage reads
+          // corpusDir (the dedup check does) — a lazily-cached `kept`
+          // would silently RECOMPUTE against the post-append corpus and
+          // dedup the batch against itself (observed: empty index
+          // writes). The pin truncates the lineage eagerly, so both
+          // writes see the same decided rows.
+          val pinned = pin(kept)
+          val n = pinned.count()
+          println(s"[${kernel.tag}] batch=$batchId kept=$n$note repair=$nRepair")
+          if (n > 0) {
+            // append under the corpus directory's append lock (r15):
+            // serializes against a manual compactor's rewrite lock,
+            // the same discipline every index append already follows
+            Dedup.indexWriteLocked(spark, corpusDir) {
+              pinned.write.mode("append").parquet(corpusDir)
             }
-            maybeCompact(spark, indexDir, batchId,
-              compactEvery, compactTargetFiles, s"mediadedup:$kind", "index")
-            maybeCompact(spark, corpusDir, batchId,
-              corpusCompactEvery, corpusCompactTargetFiles,
-              s"mediadedup:$kind", "corpus")
-            committedOnce = true // this instance's state pair is consistent
-          } finally graft.Pins.release(pinned)
-        } finally graft.Pins.release(sigs)
+            // stale-listing hygiene: this session read corpusDir for
+            // the dedup check and reads it again next batch
+            spark.catalog.refreshByPath(corpusDir)
+            // `indexExists && corpusExists`, not `indexExists` (r13,
+            // advisor): a stale index left behind by a deleted corpus
+            // was deduped around (the virgin branch ignores the index)
+            // yet appended into — ghost ids accumulate and break both
+            // the index⊆corpus repair invariant and the incremental
+            // kernels' batch-ids-disjoint contract. An index without a
+            // corpus is garbage: overwrite it.
+            kernel.writeIndex(pinned,
+              if (indexExists && corpusExists) "append" else "overwrite")
+          }
+          maybeCompact(spark, indexDir, batchId,
+            compactEvery, compactTargetFiles, kernel.tag, "index")
+          maybeCompact(spark, corpusDir, batchId,
+            corpusCompactEvery, corpusCompactTargetFiles, kernel.tag, "corpus")
+          committedOnce = true // this instance's state pair is consistent
+        } finally pins.foreach(graft.Pins.release(_, deleteCheckpointFiles = true))
         ()
       }
-      .start()
-  }
-
-  def curateToWarcShards(
-      spark: SparkSession,
-      inputDir: String,
-      outputDir: String,
-      checkpointDir: String,
-      minQuality: Double = 0.2,
-      nShards: Int = 4,
-      maxFilesPerTrigger: Int = 100,
-      pollInterval: Option[String] = None): StreamingQuery = {
-    val trigger = pollInterval
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
-    curatedStream(spark, inputDir, minQuality, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.sinks.WarcShards.write(
-          batch.toDF().select(col("doc_id").cast(StringType).as("k"),
-            concat(lit("urn:graft:doc/"), col("doc_id")).as("u"),
-            col("text").cast(BinaryType).as("p")),
-          "k", "u", "p", s"$outputDir/batch=$id", nShards)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
       .start()
   }
 }

@@ -16,7 +16,7 @@ object CompactIndex {
     require(args.nonEmpty, "usage: CompactIndex <indexPath> [targetFiles]")
     val path = args(0)
     val target = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.get()
     val rows = spark.read.parquet(path).count()
     val (before, after) = Dedup.compactIndex(spark, path, target)
     val rowsAfter = spark.read.parquet(path).count()

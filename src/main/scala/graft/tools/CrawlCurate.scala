@@ -73,7 +73,7 @@ object CrawlCurate {
         s"unrecognized argument '$s' — $Usage")
       s"${s.toInt} seconds"
     }
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.get()
     val q =
       if (raw) DocStream.curateRawCrawl(spark, warcDir,
         corpusDir = s"$out/corpus", indexDir = s"$out/index",

@@ -34,7 +34,7 @@ object EmbedCurate {
         s"unrecognized argument '$s' — $Usage")
       Some(s"${s.toInt} seconds")
     } else None
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.get()
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", org.apache.spark.sql.types.LongType)
       .add("vec", org.apache.spark.sql.types.ArrayType(

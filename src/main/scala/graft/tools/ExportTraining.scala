@@ -40,7 +40,7 @@ object ExportTraining {
     val seed = if (args.length > 3) args(3) else "v1"
     val nShards = if (args.length > 4) args(4).toInt else 8
     val blockSize = if (args.length > 5) args(5).toInt else 512
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.get()
     val vocab = graft.operators.Unigram.loadVocab(spark, vocabDir)
     val eosId = vocab.length + 1L
     val ids = graft.operators.Unigram.encodeDocsIds(

@@ -35,7 +35,7 @@ object MediaCurate {
         s"unrecognized argument '$s' — $Usage")
       s"${s.toInt} seconds"
     }
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.get()
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", org.apache.spark.sql.types.LongType)
       .add("content", org.apache.spark.sql.types.BinaryType)

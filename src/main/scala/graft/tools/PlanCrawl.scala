@@ -84,8 +84,7 @@ object PlanCrawl {
       "usage: PlanCrawl <warcDir> <planDir> [agent] [nWorkers] [maxPerHost] [defaultDelaySec]")
     val warcDir = args(0)
     val planDir = args(1)
-    val spark: SparkSession = GraftSession.get(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark: SparkSession = GraftSession.get()
     val crawl = spark.read.format("graft.sources.WarcSource")
       .option("path", warcDir).load()
     val planned = plan(crawl,

@@ -27,7 +27,7 @@ object ProfileCrawl {
   def main(args: Array[String]): Unit = {
     require(args.length == 1 || (args.length >= 4 && args(1) == "follow"),
       "usage: ProfileCrawl <warcDir> [follow <healthDir> <ckptDir> [pollSeconds]]")
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.get()
     def totals(health: org.apache.spark.sql.DataFrame): String = {
       val t = health.selectExpr("sum(n_records) as records",
         "sum(n_eligible) as eligible", "sum(n_no_body) as no_body",

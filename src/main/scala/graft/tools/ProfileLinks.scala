@@ -33,7 +33,7 @@ object ProfileLinks {
       require(s.nonEmpty && s.forall(_.isDigit), s"unrecognized argument '$s' — $Usage")
       s"${s.toInt} seconds"
     }
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.get()
     val q = graft.streaming.DocStream.profileLinkGraph(
       spark, args(0), args(1), args(2), pollInterval = poll)
     def summary(): String = {

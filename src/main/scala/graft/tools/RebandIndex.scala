@@ -25,7 +25,7 @@ object RebandIndex {
     require(args.length >= 2,
       "usage: RebandIndex <indexPath> <bands> [ranges] [targetFiles] | <indexPath> auto [targetFiles]")
     val path = args(0)
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.get()
     if (args(1).equalsIgnoreCase("auto")) {
       val target = args.lift(2).map(_.toInt).getOrElse(16)
       val a = Dedup.recommendGeometry(spark, path)

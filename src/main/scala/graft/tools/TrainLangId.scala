@@ -23,7 +23,7 @@ object TrainLangId {
     val in = args(0)
     val out = args(1)
     val dim = args.lift(2).map(_.toInt).getOrElse(1 << 15)
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.get()
     import spark.implicits._
     val raw =
       if (in.endsWith(".tsv") || in.endsWith(".txt"))

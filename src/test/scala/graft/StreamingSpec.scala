@@ -202,10 +202,13 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(corpus).select("doc_id").as[Long].collect().toSet
       === Set(1L, 4L)) // 5 near-dups 4; replayed 4 dropped by the id guard
 
-    // crash-repair: a torn index write (no _SUCCESS) rebuilds the
-    // index from the corpus, and a near-dup of an EARLY corpus doc is
-    // still caught by the rebuilt index
+    // crash-repair: a torn index write (no _SUCCESS, no marker — the
+    // marker is written last) rebuilds the index from the corpus, and
+    // a near-dup of an EARLY corpus doc is still caught by the rebuilt
+    // index
     Files.delete(java.nio.file.Paths.get(s"$index/_SUCCESS"))
+    Files.delete(java.nio.file.Paths.get(
+      graft.util.IndexMarker.markerPath(index).toUri.getPath))
     Files.writeString(java.nio.file.Paths.get(s"$in/b4.json"),
       Seq(doc(6, nearDup)).mkString("\n")) // near-dup of corpus doc 1
     val q3 = DocStream.curateNearDup(spark, in, corpus, index, ckpt,
@@ -236,10 +239,14 @@ class StreamingSpec extends SparkSpec {
     q.awaitTermination()
     assert(spark.read.parquet(index).select("id").as[Long].collect().toSet === Set(1L, 4L))
     // simulate the crash window: corpus has doc 4 but the index append
-    // for it was lost (_SUCCESS intact — this is case 2, not case 1)
+    // for it was lost (marker intact — this is case 2, not case 1)
+    val fsIdx = new org.apache.hadoop.fs.Path(index)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = graft.util.IndexMarker.read(fsIdx, index).get
     val lagged = spark.read.parquet(index).filter(col("id") =!= 4L)
       .localCheckpoint(true) // pin BEFORE overwriting the path it reads
     lagged.write.mode("overwrite").parquet(index)
+    marker.write(fsIdx, index) // the overwrite cleared the dir
     spark.catalog.refreshByPath(index)
     assert(spark.read.parquet(index).select("id").as[Long].collect().toSet === Set(1L))
     // checkpoint lost as well: a NEW checkpoint replays from scratch;
@@ -274,6 +281,58 @@ class StreamingSpec extends SparkSpec {
     assert(leaked.isEmpty, s"leaked reliable checkpoint dirs: $leaked")
   }
 
+  test("near-dup curation: a banded index committed without its marker is rebuilt, not appended into") {
+    // the index's commit point is its marker, written after the parquet
+    // commit: a crash between the two leaves parquet + _SUCCESS but no
+    // marker, an index no probe or append can read as banded
+    import graft.streaming.DocStream
+    import graft.operators.Dedup
+    val base = "the quick brown fox jumps over the lazy dog near the river bank today"
+    val other = "completely different content about spark query engines and columnar execution"
+    val otherNear = "completely different content about spark query engines and columnar planning"
+    val novel = "an entirely separate sentence regarding banded signature indexes and crash windows"
+    def doc(id: Long, text: String) =
+      s"""{"doc_id":$id,"text":"$text","lang":"en","source":"s","n_chars":${text.length}}"""
+    final case class Run(in: String, corpus: String, index: String, ckpt: String)
+    def run(tag: String) = Run(Files.createTempDirectory(s"${tag}_in").toString,
+      Files.createTempDirectory(s"${tag}_corpus").toString + "/corpus",
+      Files.createTempDirectory(s"${tag}_idx").toString + "/idx",
+      Files.createTempDirectory(s"${tag}_ckpt").toString)
+    def arrive(r: Run, name: String, docs: (Long, String)*): Unit =
+      Files.writeString(java.nio.file.Paths.get(s"${r.in}/$name.json"),
+        docs.map { case (i, t) => doc(i, t) }.mkString("\n"))
+    def drain(r: Run): Unit = DocStream.curateNearDup(spark, r.in, r.corpus, r.index,
+      r.ckpt, minJaccard = 0.5, maxFilesPerTrigger = 1,
+      indexBands = 8, indexRanges = 16).awaitTermination()
+    def corpusRows(r: Run) = spark.read.parquet(r.corpus)
+      .select("doc_id", "text").as[(Long, String)].collect().toSet
+    def indexRows(r: Run) = spark.read.parquet(r.index)
+      .select("id", "band", "band_hash", "sig", "pblock").collect().toSet
+    val batch1 = Seq(1L -> base, 4L -> other)
+    val batch2 = Seq(7L -> otherNear, 9L -> novel) // 7 near-dups corpus doc 4
+
+    val whole = run("mk_whole")
+    arrive(whole, "b1", batch1: _*)
+    arrive(whole, "b2", batch2: _*)
+    drain(whole)
+    assert(corpusRows(whole).map(_._1) === Set(1L, 4L, 9L))
+
+    val torn = run("mk_torn")
+    arrive(torn, "b1", batch1: _*)
+    drain(torn)
+    // crash between the first index write's parquet commit and its marker
+    val fs = new org.apache.hadoop.fs.Path(torn.index)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"${torn.index}/_SUCCESS")))
+    assert(fs.delete(graft.util.IndexMarker.markerPath(torn.index), false))
+    spark.catalog.refreshByPath(torn.index)
+    arrive(torn, "b2", batch2: _*)
+    drain(torn) // restart on the same checkpoint
+    assert(corpusRows(torn) === corpusRows(whole))
+    assert(indexRows(torn) === indexRows(whole))
+    assert(Dedup.markerLayout(spark, torn.index) === Some((8, 16)))
+  }
+
   test("streaming image curation: arriving batches dedup against the accumulated hamming index") {
     import graft.streaming.DocStream
     import graft.operators.Multimodal.MiniEncoder
@@ -287,9 +346,9 @@ class StreamingSpec extends SparkSpec {
     def arrive(rows: Seq[(Long, Array[Byte])]): Unit =
       rows.toDF("doc_id", "content").coalesce(1).write.mode("append").parquet(in)
     val schema = new StructType().add("doc_id", LongType).add("content", BinaryType)
-    def drain(): Unit = DocStream.curateImageNearDup(spark,
+    def drain(): Unit = DocStream.curateMediaNearDup(spark,
       spark.readStream.schema(schema).parquet(in),
-      corpus, index, ckpt, maxDistance = 0).awaitTermination()
+      corpus, index, ckpt, kind = "image", maxDistance = 0).awaitTermination()
     def corpusIds() = spark.read.parquet(corpus)
       .select("doc_id").as[Long].collect().toSet
     arrive(Seq(1L -> png(13), 2L -> png(7)))
@@ -399,9 +458,9 @@ class StreamingSpec extends SparkSpec {
     def arrive(in: String, rows: Seq[(Long, Array[Byte])]): Unit =
       rows.toDF("doc_id", "content").coalesce(1).write.mode("append").parquet(in)
     val schema = new StructType().add("doc_id", LongType).add("content", BinaryType)
-    def drain(in: String, ckpt: String): Unit = DocStream.curateImageNearDup(spark,
+    def drain(in: String, ckpt: String): Unit = DocStream.curateMediaNearDup(spark,
       spark.readStream.schema(schema).parquet(in),
-      corpus, index, ckpt, maxDistance = 0).awaitTermination()
+      corpus, index, ckpt, kind = "image", maxDistance = 0).awaitTermination()
     arrive(in1, Seq(1L -> png(13), 2L -> png(7)))
     drain(in1, Files.createTempDirectory("ghost_ck1").toString)
     assert(spark.read.parquet(index).select("id").as[Long].collect().toSet === Set(1L, 2L))
@@ -786,9 +845,9 @@ class StreamingSpec extends SparkSpec {
     def arrive(rows: Seq[(Long, Array[Byte])]): Unit =
       rows.toDF("doc_id", "content").coalesce(1).write.mode("append").parquet(in)
     val schema = new StructType().add("doc_id", LongType).add("content", BinaryType)
-    def drain(): Unit = DocStream.curateImageNearDup(spark,
+    def drain(): Unit = DocStream.curateMediaNearDup(spark,
       spark.readStream.schema(schema).parquet(in),
-      corpus, index, ckpt, maxDistance = 0,
+      corpus, index, ckpt, kind = "image", maxDistance = 0,
       indexBands = 8, indexRanges = 16).awaitTermination()
     def corpusIds() = spark.read.parquet(corpus)
       .select("doc_id").as[Long].collect().toSet
